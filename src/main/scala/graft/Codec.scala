@@ -55,6 +55,14 @@ object Codec {
       buf(nn) = b
       nn += 1
     }
+    /** Append `src` whole. */
+    def addAll(src: Array[Byte]): Unit = {
+      if (nn + src.length > buf.length)
+        buf = java.util.Arrays.copyOf(buf, math.max(buf.length << 1, nn + src.length))
+      System.arraycopy(src, 0, buf, nn, src.length)
+      nn += src.length
+    }
+    def size: Int = nn
     def clear(): Unit = nn = 0
     def toArray: Array[Byte] = java.util.Arrays.copyOf(buf, nn)
   }

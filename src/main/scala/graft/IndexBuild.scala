@@ -87,8 +87,9 @@ object IndexBuild {
 
 
   /** Scala mirror of the Catalyst `pmod(xxhash64(term, bucket), P)` used
-    * for partition routing — bit-exact parity with
-    * [[QueryEngine.candidatePartIds]] is spec-asserted (EngineSpec). */
+    * for partition routing — bit-exact parity is spec-asserted
+    * (EngineSpec). Query routing ([[QueryEngine.candidatePartIds]]) calls
+    * it on the driver. */
   def partIdOf(term: String, bucket: Int, numPartitions: Int): Int = {
     import org.apache.spark.sql.catalyst.expressions.XxHash64Function
     import org.apache.spark.sql.types.{IntegerType, StringType}

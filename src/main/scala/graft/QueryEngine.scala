@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Batched indexed query — the graft of the reference's two-phase routed
@@ -8,23 +8,30 @@ import org.apache.spark.sql.functions._
   *
   *  Phase 1 (driver, no job): build the per-batch term table — idf per
   *  query term from the stats table (the reference's per-query `DTable`
-  *  LUT, `src/index_ivfpq.cpp:554-568`) — and the candidate partition set
+  *  LUT, `src/index_ivfpq.cpp:554-568`), memoized on the open handle —
+  *  and, for a term-partitioned index, the candidate partition set
   *  (term-partition pruning: rare terms hash to exactly one (term,0)
-  *  partition; salted head terms enumerate their docId buckets). Both are
-  *  broadcast.
+  *  partition, computed with [[IndexBuild.partIdOf]]; salted head terms
+  *  enumerate their docId buckets). The plan is broadcast. A batch none of
+  *  whose terms is in the index is answered here, empty.
   *
-  *  Phase 2 (one Spark job for the WHOLE query batch, like `TopKId`'s
-  *  single OMP pass): scan only candidate partitions/terms (Parquet
-  *  partition pruning on part_id + row-group skipping on the term-sorted
-  *  files), fan each posting row out to the queries that use its term,
-  *  group per query, run block-max [[Wand]], collect nq·k hit rows.
+  *  Phase 2 (one scan for the WHOLE query batch, like `TopKId`'s single
+  *  OMP pass):
+  *   - cached doc-partitioned handle ([[runPacked]]): ONE job. Each task
+  *     looks up the batch's terms in its packed serving partition
+  *     ([[ServingPart]]) and scores every query over them with the shared
+  *     per-bucket scorer ([[scoreBuckets]]);
+  *   - uncached doc-partitioned index, or a head-heavy batch on a
+  *     term-partitioned one ([[runDocPartitioned]]): scan the batch's rows,
+  *     co-locate them by docId bucket (one shuffle), same scorer;
+  *   - rare-term batch on a term-partitioned index ([[run]]): scan only
+  *     the candidate partitions, group per query, block-max [[Wand]].
+  *  The bounded nq·k hits merge on the driver and come back as a local
+  *  DataFrame in (query_id, rank) order — no sort job.
   *
-  * Scale note: queries are independent groups ⇒ the batch parallelizes
-  * across executors; per-group memory is the compressed lists of ONE
-  * query (blocks decode lazily inside WAND). For head-heavy queries at
-  * extreme scale the bucket sub-lists allow splitting a query into
-  * docId-range sub-groups merged via [[TopK.mergeTopK]] — same structure
-  * as the reference's per-cluster fan-out.
+  * Scale note: the doc-partitioned paths bound per-task memory by the
+  * bucket width; the per-query grouping holds ONE query's compressed
+  * lists and is only taken below [[MaxGroupPostings]].
   */
 object QueryEngine {
 
@@ -35,6 +42,12 @@ object QueryEngine {
     val wandCalls = spark.sparkContext.longAccumulator("wand_calls")
     val blocksTotal = spark.sparkContext.longAccumulator("blocks_total")
     val blocksDecoded = spark.sparkContext.longAccumulator("blocks_decoded")
+    // Docs TOUCHED after pruning: per scorer call, the candidates the
+    // bucket scorer offered or scanned once chunk-max skipping and the TA
+    // walk had run (a WAND call counts the docs it fully scored). Pruning
+    // lowers it, so it is not the count of docs holding a query term.
+    // The name is kept because the benchmark's buckettaat.docs_touched
+    // reads it.
     val docsScored = spark.sparkContext.longAccumulator("docs_scored")
     // Wall-time split of the batched scorer (task-summed nanos; the
     // SURVEY §7.5 codegen-Expression question needs the DECODE share of
@@ -315,7 +328,16 @@ object QueryEngine {
 
     /** termLists: per term of this bucket, (docIdx within bucket, contribMicro).
       * Scores every posting of `queryTerms` present in this bucket into
-      * `heap` (doc ids globalized with `base`). Returns touched-doc count.
+      * `heap` (doc ids globalized with `base`). Returns the touched-doc
+      * count (after pruning — see [[EffortAccs.docsScored]]).
+      *
+      * Freshness contract: the dense-column and TA-sort caches are keyed
+      * by the IDENTITY of each `idxs` array and live until the next
+      * [[beginBucket]]. Every bucket must therefore pass freshly decoded
+      * arrays — a caller that reused one decode buffer across buckets
+      * would be scored against the previous bucket's columns, silently.
+      * [[scoreBuckets]], the only caller, allocates new arrays per
+      * (bucket, term).
       *
       * `required = 0` is disjunctive (OR) BM25; `required = m > 0` is
       * conjunctive — only docs matched by exactly m lists qualify (the
@@ -808,9 +830,9 @@ object QueryEngine {
         Wand.topk(qid, lists, p.avgdl, p.k,
           effortOut = e => effort.foreach(_.sink(e)))
       }
-    hits.toDF()
-      .select($"query_id", $"rank", $"doc_id", $"score_micro")
-      .orderBy($"query_id", $"rank")
+    // nq·k bounded rows: a driver sort, where an orderBy would cost a
+    // range-sample job plus a sort stage
+    localHits(spark, hits.collect().sortBy(h => (h.query_id, h.rank)).toSeq)
   }
 
   /** Candidate (term, bucket) pairs for partition pruning (phase-1
@@ -849,18 +871,15 @@ object QueryEngine {
       candidatePairs(termMaxBucket, queries)))
   }
 
-  /** part_id for each candidate pair, computed with the SAME Catalyst
-    * xxhash64 expression the build used (tiny local job ⇒ exact parity,
-    * no hand-rolled hash drift). */
+  /** part_id for each candidate pair, computed on the driver with
+    * [[IndexBuild.partIdOf]] — the Scala mirror of the build's Catalyst
+    * `pmod(xxhash64(term, bucket), P)`, bit-exact parity pinned by
+    * EngineSpec — so routing a rare-term batch launches no job. (`spark`
+    * is unused.) */
   def candidatePartIds(spark: SparkSession, meta: IndexBuild.Meta,
-                       pairs: Seq[(String, Int)]): Seq[Int] = {
-    import spark.implicits._
-    if (pairs.isEmpty) Seq.empty
-    else pairs.toDF("term", "bucket")
-      .select(pmod(xxhash64($"term", $"bucket"), lit(meta.num_partitions))
-        .cast("int").as("part_id"))
-      .distinct().as[Int].collect().toSeq.sorted
-  }
+                       pairs: Seq[(String, Int)]): Seq[Int] =
+    pairs.map { case (t, b) => IndexBuild.partIdOf(t, b, meta.num_partitions) }
+      .distinct.sorted
 
   /** Re-bucket posting rows into docId-range buckets (bucket = doc_id /
     * width) so the doc-partitioned batched scorer can serve a TERM-
@@ -932,171 +951,229 @@ object QueryEngine {
     }
   }
 
-  /** Batched query over a DOC-partitioned serving index: each task holds
-    * ALL terms of its docId ranges, so it evaluates EVERY query of the
-    * batch against its partition once (zero posting duplication — unlike
-    * the per-query grouping above, which ships each head-term row to every
-    * query using it). Per-(query, bucket) block-max WAND produces bounded
-    * partial heaps; heaps merge associatively per query (the treeReduce
-    * shape: `reduceGroups(mergeTopK)` over O(parts · nq · k) tiny rows).
-    * Rank-identity: per-bucket doc sets are disjoint, and top-k of a
-    * disjoint union = top-k of per-part top-k's under the frozen total
-    * order. */
+  /** Batched query over a DOC-partitioned layout read from `postings`
+    * (disk segments, or re-bucketed term-partitioned rows): every task holds
+    * ALL terms of its docId ranges, so it evaluates EVERY query of the batch
+    * against its partition once (zero posting duplication — unlike the
+    * per-query grouping of [[run]], which ships each head-term row to every
+    * query using it). A cached handle runs the same scorer from its packed
+    * layout instead ([[runPacked]]). Rank-identity: per-bucket doc sets are
+    * disjoint, and top-k of a disjoint union = top-k of per-part top-k's
+    * under the frozen total order. */
   def runDocPartitioned(spark: SparkSession, postings: Dataset[PostingRow],
                         plan: Plan, effort: Option[EffortAccs] = None,
-                        preFiltered: Boolean = false,
-                        bucketLocal: Boolean = false): DataFrame = {
+                        preFiltered: Boolean = false): DataFrame = {
     import spark.implicits._
+    require(plan.bucketWidth > 0, "doc-partitioned plan needs bucketWidth from meta")
     val bc = spark.sparkContext.broadcast(plan)
-    val terms = plan.termToQueries.keys.toSeq
-    val width = plan.bucketWidth.toInt
-    require(width > 0, "doc-partitioned plan needs bucketWidth from meta")
     // preFiltered: caller already restricted to the batch's terms (the
     // head-heavy rebucket path) — don't plan a second semi-join stage.
     // An attr-filtered batch also keeps its virtual filter lists.
     val filtered = if (preFiltered) postings
-                   else restrictToPlan(postings, terms, plan)
-    // bucketLocal: the caller guarantees every bucket's rows are already
-    // co-located in one input partition (the handle's cached serving
-    // layout) — the repartition below would be a pure re-shuffle of the
-    // same grouping, paid once per BATCH.
-    val spread = if (bucketLocal) filtered else
-      // The pruned posting set is compact parquet — a plain scan packs it
-      // into very few input splits (maxPartitionBytes), serializing the
-      // scoring work. Spread buckets across the cluster; the shuffle moves
-      // only the pruned, compressed lists.
-      filtered.repartition($"bucket")
-    val partials: Dataset[(Int, Seq[TopK.Cand])] = spread
-      .mapPartitions { it =>
-        val p = bc.value
-        val w = p.bucketWidth.toInt
-        // bucket -> term -> rows (one row per (term,bucket) normally;
-        // merged inputs may contribute several)
-        val byBucket = scala.collection.mutable.Map
-          .empty[Int, scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[PostingRow]]]
-        it.foreach { r =>
-          byBucket.getOrElseUpdate(r.bucket, scala.collection.mutable.Map.empty)
-            .getOrElseUpdate(r.term, scala.collection.mutable.ArrayBuffer.empty) += r
-        }
-        val taat = new BucketTaat(w, p.k)
-        val prof = effort.isDefined
-        // Per-task running top-k per query: the threshold CARRIES across
-        // this task's buckets, enabling the block-max skip below (phase
-        // profiling at 8M docs: TAAT accumulation was 96% of query task
-        // time; decode+contrib ~3%). Rank-identity is exact: a bucket is
-        // skipped only when its score upper bound is STRICTLY below the
-        // query's current k-th score, i.e. when every insert from it
-        // would provably no-op under the frozen (score DESC, doc_id ASC)
-        // order — the reference's block-max pruning argument
-        // (`src/index_ivf.cpp:220-234` partial_sort + threshold).
-        val heaps = scala.collection.mutable.HashMap.empty[Int, QueryHeap]
-        var decodeNs = 0L; var contribNs = 0L; var scoreNs = 0L
-        // ASCENDING bucket order: results are order-independent (the
-        // merged top-k set is unique under the frozen total order), but
-        // ascending docId ranges make the tight θ floor
-        // ([[QueryHeap.tightFloorFor]]) true for every bucket after each
-        // query's heap first fills — the earliest (lowest-docId) ties win
-        // immediately and every later bucket's ties are provably
-        // rejectable with one compare. Also makes task execution
-        // deterministic (HashMap order was arbitrary).
-        byBucket.toSeq.sortBy(_._1).foreach { case (bucket, termRows) =>
-          val base = bucket.toLong * w
-          taat.beginBucket() // recycle the previous bucket's dense columns
-          // Attribute filter: fold this bucket's virtual filter lists
-          // ([[Attrs]] rows riding the same posting stream) into the
-          // scorer's stamp-cleared allowed-offset mask — OR across the
-          // predicate's values. A filtered plan with NO filter row here
-          // means no doc of this bucket matches the predicate: skip the
-          // bucket outright.
-          val masked = p.filterActive
-          var anyAllowed = !masked
-          if (masked) {
-            taat.beginMask()
-            termRows.foreach { case (t, rows) =>
-              if (p.isRequestedFilter(t))
-                rows.foreach(_.blocks.foreach { b =>
-                  val (ds, _, _) = Codec.decodeBlock(b)
-                  var i = 0
-                  while (i < ds.length) {
-                    taat.allow((ds(i) - base).toInt)
-                    i += 1
-                  }
-                  anyAllowed ||= ds.length > 0
-                })
-            }
-          }
-          if (anyAllowed) {
-          // decode each term's postings ONCE; precompute micro-contribs
-          // (and the term's max contrib = its block-max bound) ONCE,
-          // shared by every query using the term
-          var bucketBlocks = 0L
-          val maxC = scala.collection.mutable.HashMap.empty[String, Long]
-          val termLists: Map[String, (Array[Int], Array[Long])] =
-            termRows.iterator.filter(e => !Attrs.isFilterTerm(e._1))
-              .map { case (t, rows) =>
-              val idf = p.termIdf(t)
-              val n = rows.iterator.map(_.n).sum.toInt
-              val idxs = new Array[Int](n)
-              val cs = new Array[Long](n)
-              var o = 0
-              var mx = 0L
-              rows.sortBy(_.min_doc).foreach { r =>
-                bucketBlocks += r.blocks.size
-                r.blocks.foreach { b =>
-                  val t0 = if (prof) System.nanoTime() else 0L
-                  val (ds, tfs, dls) = Codec.decodeBlock(b)
-                  val t1 = if (prof) System.nanoTime() else 0L
-                  var i = 0
-                  while (i < ds.length) {
-                    idxs(o) = (ds(i) - base).toInt
-                    val c = Bm25.contribMicro(idf, tfs(i).toLong, dls(i).toLong, p.avgdl)
-                    cs(o) = c
-                    if (c > mx) mx = c
-                    o += 1; i += 1
-                  }
-                  if (prof) { decodeNs += t1 - t0; contribNs += System.nanoTime() - t1 }
-                }
+                   else restrictToPlan(postings, plan.termToQueries.keys.toSeq, plan)
+    // The pruned posting set is compact parquet — a plain scan packs it
+    // into very few input splits (maxPartitionBytes), serializing the
+    // scoring work. Spread buckets across the cluster (and co-locate each
+    // bucket's rows, which the scorer needs); the shuffle moves only the
+    // pruned, compressed lists.
+    val partials = filtered.repartition($"bucket")
+      .mapPartitions(rows => scoreBuckets(bc.value, rows, effort))
+    mergePartials(spark, partials, plan, effort)
+  }
+
+  /** One batch over a cached handle's packed serving layout
+    * ([[openIndex]]): ONE job and no shuffle. Each task looks up only the
+    * batch's terms — and, when filtered, the requested filter lists — in
+    * its partition's [[ServingPart]] directory and feeds the rows to
+    * [[scoreBuckets]]. The layout was co-located by bucket when it was
+    * filled, so every bucket the task sees arrives whole. */
+  def runPacked(spark: SparkSession, served: Dataset[ServingPart], plan: Plan,
+                effort: Option[EffortAccs] = None): DataFrame = {
+    import spark.implicits._
+    require(plan.bucketWidth > 0, "doc-partitioned plan needs bucketWidth from meta")
+    // broadcast, not captured in the closure: tasks then read the plan
+    // once per executor (in local mode they share the driver's object)
+    // instead of each deserializing its own copy
+    val bc = spark.sparkContext.broadcast(plan)
+    val partials = served.mapPartitions { parts =>
+      val p = bc.value
+      val wantFilter: String => Boolean =
+        if (p.filterActive) p.isRequestedFilter else _ => false
+      scoreBuckets(p, parts.flatMap(_.lookup(p.termToQueries.keys, wantFilter)), effort)
+    }
+    mergePartials(spark, partials, plan, effort)
+  }
+
+  /** The batched scorer of one partition, shared by every doc-partitioned
+    * path: group the rows (postings, plus the plan's filter lists) by
+    * bucket and term, then score every query of the batch over each bucket
+    * with one [[BucketTaat]], carrying per-query heaps across buckets.
+    * `rows` must hold ALL rows of every bucket it touches — per-bucket AND
+    * and the filter mask are whole-bucket decisions. Returns the bounded
+    * partial top-k of every query seen, as one [[Partials]]. */
+  private[graft] def scoreBuckets(p: Plan, rows: Iterator[PostingRow],
+                                  effort: Option[EffortAccs]): Iterator[Partials] = {
+    val w = p.bucketWidth.toInt
+    // bucket -> term -> rows (one row per (term,bucket) normally;
+    // merged inputs may contribute several)
+    val byBucket = scala.collection.mutable.Map
+      .empty[Int, scala.collection.mutable.Map[String, scala.collection.mutable.ArrayBuffer[PostingRow]]]
+    rows.foreach { r =>
+      byBucket.getOrElseUpdate(r.bucket, scala.collection.mutable.Map.empty)
+        .getOrElseUpdate(r.term, scala.collection.mutable.ArrayBuffer.empty) += r
+    }
+    val taat = new BucketTaat(w, p.k)
+    val prof = effort.isDefined
+    // Per-task running top-k per query: the threshold CARRIES across
+    // this task's buckets, enabling the block-max skip below (phase
+    // profiling at 8M docs: TAAT accumulation was 96% of query task
+    // time; decode+contrib ~3%). Rank-identity is exact: a bucket is
+    // skipped only when its score upper bound is STRICTLY below the
+    // query's current k-th score, i.e. when every insert from it
+    // would provably no-op under the frozen (score DESC, doc_id ASC)
+    // order — the reference's block-max pruning argument
+    // (`src/index_ivf.cpp:220-234` partial_sort + threshold).
+    val heaps = scala.collection.mutable.HashMap.empty[Int, QueryHeap]
+    var decodeNs = 0L; var contribNs = 0L; var scoreNs = 0L
+    // ASCENDING bucket order: results are order-independent (the
+    // merged top-k set is unique under the frozen total order), but
+    // ascending docId ranges make the tight θ floor
+    // ([[QueryHeap.tightFloorFor]]) true for every bucket after each
+    // query's heap first fills — the earliest (lowest-docId) ties win
+    // immediately and every later bucket's ties are provably
+    // rejectable with one compare. Also makes task execution
+    // deterministic (HashMap order was arbitrary).
+    byBucket.toSeq.sortBy(_._1).foreach { case (bucket, termRows) =>
+      val base = bucket.toLong * w
+      taat.beginBucket() // recycle the previous bucket's dense columns
+      // Attribute filter: fold this bucket's virtual filter lists
+      // ([[Attrs]] rows riding the same posting stream) into the
+      // scorer's stamp-cleared allowed-offset mask — OR across the
+      // predicate's values. A filtered plan with NO filter row here
+      // means no doc of this bucket matches the predicate: skip the
+      // bucket outright.
+      val masked = p.filterActive
+      var anyAllowed = !masked
+      if (masked) {
+        taat.beginMask()
+        termRows.foreach { case (t, rows) =>
+          if (p.isRequestedFilter(t))
+            rows.foreach(_.blocks.foreach { b =>
+              val (ds, _, _) = Codec.decodeBlock(b)
+              var i = 0
+              while (i < ds.length) {
+                taat.allow((ds(i) - base).toInt)
+                i += 1
               }
-              maxC(t) = mx
-              t -> (idxs, cs)
-            }.toMap
-          val queriesHere = termRows.keysIterator
-            .flatMap(t => p.termToQueries.getOrElse(t, Nil)).toSet
-          // blocksTotal = naive per-query decode cost; blocksDecoded = the
-          // actual once-per-bucket decodes — the ratio is the sharing win
-          effort.foreach { a =>
-            a.blocksTotal.add(bucketBlocks * queriesHere.size)
-            a.blocksDecoded.add(bucketBlocks)
-          }
-          queriesHere.foreach { qid =>
-            val heap = heaps.getOrElseUpdate(qid, new QueryHeap(p.k))
-            var bound = 0L
-            p.queryTermSets(qid).foreach(t => bound += maxC.getOrElse(t, 0L))
-            if (heap.n == p.k && bound < heap.kth) {
-              effort.foreach(_.bucketsSkipped.add(1L)) // provably fruitless
-            } else {
-              val t0 = if (prof) System.nanoTime() else 0L
-              val req = if (p.conjunctive) p.queryTermSets(qid).size else 0
-              val nTouched =
-                taat.score(p.queryTermSets(qid), termLists, base, heap, req, masked)
-              effort.foreach { a =>
-                scoreNs += System.nanoTime() - t0
-                a.wandCalls.add(1L); a.docsScored.add(nTouched.toLong)
-              }
-            }
-          }
-          } // anyAllowed
+              anyAllowed ||= ds.length > 0
+            })
         }
-        effort.foreach { a =>
-          a.decodeNanos.add(decodeNs); a.contribNanos.add(contribNs)
-          a.scoreNanos.add(scoreNs)
-        }
-        // one bounded partial per (task, query) — fewer merge rows than
-        // the per-bucket emission this replaces
-        heaps.iterator.map { case (qid, h) => (qid, h.toCands) }
       }
-    // Final merge. The partials are BOUNDED: one row per (task, query),
-    // each ≤ k cands — at most shufflePartitions·nq·k candidate rows.
+      if (anyAllowed) {
+      // decode each term's postings ONCE; precompute micro-contribs
+      // (and the term's max contrib = its block-max bound) ONCE,
+      // shared by every query using the term
+      var bucketBlocks = 0L
+      val maxC = scala.collection.mutable.HashMap.empty[String, Long]
+      val termLists: Map[String, (Array[Int], Array[Long])] =
+        termRows.iterator.filter(e => !Attrs.isFilterTerm(e._1))
+          .map { case (t, rows) =>
+          val idf = p.termIdf(t)
+          val n = rows.iterator.map(_.n).sum.toInt
+          val idxs = new Array[Int](n)
+          val cs = new Array[Long](n)
+          var o = 0
+          var mx = 0L
+          rows.sortBy(_.min_doc).foreach { r =>
+            bucketBlocks += r.blocks.size
+            r.blocks.foreach { b =>
+              val t0 = if (prof) System.nanoTime() else 0L
+              val (ds, tfs, dls) = Codec.decodeBlock(b)
+              val t1 = if (prof) System.nanoTime() else 0L
+              var i = 0
+              while (i < ds.length) {
+                idxs(o) = (ds(i) - base).toInt
+                val c = Bm25.contribMicro(idf, tfs(i).toLong, dls(i).toLong, p.avgdl)
+                cs(o) = c
+                if (c > mx) mx = c
+                o += 1; i += 1
+              }
+              if (prof) { decodeNs += t1 - t0; contribNs += System.nanoTime() - t1 }
+            }
+          }
+          maxC(t) = mx
+          t -> (idxs, cs)
+        }.toMap
+      val queriesHere = termRows.keysIterator
+        .flatMap(t => p.termToQueries.getOrElse(t, Nil)).toSet
+      // blocksTotal = naive per-query decode cost; blocksDecoded = the
+      // actual once-per-bucket decodes — the ratio is the sharing win
+      effort.foreach { a =>
+        a.blocksTotal.add(bucketBlocks * queriesHere.size)
+        a.blocksDecoded.add(bucketBlocks)
+      }
+      queriesHere.foreach { qid =>
+        val heap = heaps.getOrElseUpdate(qid, new QueryHeap(p.k))
+        var bound = 0L
+        p.queryTermSets(qid).foreach(t => bound += maxC.getOrElse(t, 0L))
+        if (heap.n == p.k && bound < heap.kth) {
+          effort.foreach(_.bucketsSkipped.add(1L)) // provably fruitless
+        } else {
+          val t0 = if (prof) System.nanoTime() else 0L
+          val req = if (p.conjunctive) p.queryTermSets(qid).size else 0
+          val nTouched =
+            taat.score(p.queryTermSets(qid), termLists, base, heap, req, masked)
+          effort.foreach { a =>
+            scoreNs += System.nanoTime() - t0
+            a.wandCalls.add(1L); a.docsScored.add(nTouched.toLong)
+          }
+        }
+      }
+      } // anyAllowed
+    }
+    effort.foreach { a =>
+      a.decodeNanos.add(decodeNs); a.contribNanos.add(contribNs)
+      a.scoreNanos.add(scoreNs)
+    }
+    // one bounded partial per (task, query) — fewer merge rows than
+    // the per-bucket emission this replaces
+    val n = heaps.valuesIterator.map(_.n).sum
+    val out = Partials(new Array[Int](n), new Array[Long](n), new Array[Long](n))
+    var o = 0
+    heaps.foreach { case (qid, h) =>
+      var i = 0
+      while (i < h.n) {
+        out.qids(o) = qid; out.docs(o) = h.hDoc(i); out.scores(o) = h.hScore(i)
+        o += 1; i += 1
+      }
+    }
+    Iterator.single(out)
+  }
+
+  /** One task's partial top-k's in flat primitive arrays (the collect
+    * then deserializes three array copies per task, not nq rows of
+    * candidate structs): query `qids(i)`'s candidate `docs(i)` with score
+    * `scores(i)`, each query's candidates contiguous and in rank order. */
+  final case class Partials(qids: Array[Int], docs: Array[Long], scores: Array[Long]) {
+    def byQuery: Seq[(Int, Seq[TopK.Cand])] = {
+      val out = Vector.newBuilder[(Int, Seq[TopK.Cand])]
+      var i = 0
+      while (i < qids.length) {
+        var j = i
+        while (j < qids.length && qids(j) == qids(i)) j += 1
+        out += qids(i) -> (i until j).map(x => TopK.Cand(docs(x), scores(x)))
+        i = j
+      }
+      out.result()
+    }
+  }
+
+  /** Merge the per-task partial top-k's into the batch result. */
+  private def mergePartials(spark: SparkSession, partials: Dataset[Partials],
+                            plan: Plan, effort: Option[EffortAccs]): DataFrame = {
+    import spark.implicits._
+    // The partials are BOUNDED: ≤ k cands per (task, query) — at most
+    // shufflePartitions·nq·k candidates.
     // When that fits comfortably on the driver, merge there: the
     // distributed alternative is a whole extra shuffle + sort stage whose
     // scheduling latency is pure FIXED cost (~1s), which the fast
@@ -1112,17 +1189,16 @@ object QueryEngine {
       val collected = partials.collect() // the scoring job itself
       val t0 = System.nanoTime()
       val byQ = scala.collection.mutable.HashMap.empty[Int, Seq[TopK.Cand]]
-      collected.foreach { case (qid, cands) =>
+      collected.foreach(_.byQuery.foreach { case (qid, cands) =>
         byQ(qid) = TopK.mergeTopK(byQ.getOrElse(qid, Vector.empty), cands, plan.k)
-      }
+      })
       effort.foreach(_.mergeNanos.add(System.nanoTime() - t0))
       val hits = byQ.toSeq.sortBy(_._1).flatMap { case (qid, cands) =>
         cands.zipWithIndex.map { case (c, i) => Hit(qid, i + 1, c.doc_id, c.score_micro) }
       }
-      spark.createDataset(hits).toDF()
-        .select($"query_id", $"rank", $"doc_id", $"score_micro")
-        .orderBy($"query_id", $"rank") // same declared order as the distributed branch
+      localHits(spark, hits) // already in (query_id, rank) order: no sort job
     } else partials
+      .flatMap(_.byQuery)
       .groupByKey(_._1)
       .reduceGroups { (a: (Int, Seq[TopK.Cand]), b: (Int, Seq[TopK.Cand])) =>
         if (effort.isDefined) {
@@ -1140,29 +1216,42 @@ object QueryEngine {
       .orderBy($"query_id", $"rank")
   }
 
+
+  /** Hits already in (query_id, rank) order as a local DataFrame: reading
+    * it back launches no job and sorts nothing. */
+  private def localHits(spark: SparkSession, hits: Seq[Hit]): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    // Rows + schema build the relation in one step (an encoder-built
+    // Dataset plus toDF costs the driver about twice as much)
+    spark.createDataFrame(
+      hits.map(h => Row(h.query_id, h.rank, h.doc_id, h.score_micro)).asJava, HitSchema)
+  }
+
+  private val HitSchema = Encoders.product[Hit].schema
+
   /** Driver-merge ceiling for the batched scorer's final stage: the
     * collect is O(tasks·nq·k) bounded rows (~50 MB at the cap), NOT a
     * distributed-work collect. */
   val DriverMergeMaxCands: Long = 1L << 20
 
-  /** End-to-end: query a disk index. Doc-partitioned indexes use the
-    * batched zero-duplication path; term-partitioned ones the pruned
-    * per-query path. */
   /** An OPENED index — the reference's LoadIndex analog
     * (`src/index_ivfpq.cpp:326-348`): meta is read once, and the
     * segments/stats scans are ANALYZED once (parquet file listing +
     * schema resolution are driver-side serial work; re-doing them per
     * query batch was ~0.3-0.5 s of the measured ~2 s serial section of
     * the batched query path). Query batches against a handle pay only
-    * their own term-stats lookup + the scoring job. */
+    * their own term-stats lookup (memoized) + the scoring job.
+    *
+    * `served` is the packed serving layout of a doc-partitioned index
+    * opened with `cacheServing` — persisted [[ServingPart]] rows, one per
+    * serving partition below [[ServingPart.MaxPartBytes]], filled by the
+    * first batch — and `attrsCached` says it holds the attr sidecar's
+    * virtual filter lists (false for a sidecar written AFTER the open:
+    * filtered batches then bypass the cache and read the segments). */
   final case class IndexHandle(dir: String, meta: IndexBuild.Meta,
                                segments: Dataset[PostingRow],
                                stats: DataFrame,
-                               served: Option[Dataset[PostingRow]] = None,
-                               // the serving cache carries the attr
-                               // sidecar's virtual filter lists (false for
-                               // a sidecar written AFTER the open — then
-                               // filtered batches bypass the cache)
+                               served: Option[Dataset[ServingPart]] = None,
                                attrsCached: Boolean = false) {
     /** Per-term (df, max_bucket) memo for the handle's lifetime — index
       * metadata, immutable once the index is open (stats/terms is part
@@ -1179,33 +1268,32 @@ object QueryEngine {
     def close(): Unit = served.foreach(_.unpersist())
   }
 
-  /** Open an index for querying. For a DOC-partitioned serving index the
-    * handle caches the bucket-partitioned posting layout in executor
-    * memory (spilling to disk) — the reference's LoadIndex-into-RAM
-    * serving shape (`src/index_ivfpq.cpp:326-348`): the first batch pays
-    * one scan+shuffle to materialize it; every later batch scores
-    * straight from the cache. Without this, EVERY batch re-paid a full
-    * scan + shuffle of the batch's posting mass (at bench scale: 627 MB
-    * and the single worst-scaling stage of the whole query path, since
-    * its cost is mostly fixed I/O wait, which the high-parallelism point
-    * cannot speed up). Callers that query once should pass
+  /** Open an index for querying. For a DOC-partitioned index the handle
+    * caches a packed serving layout in executor memory (spilling to disk)
+    * — the reference's LoadIndex-into-RAM serving shape
+    * (`src/index_ivfpq.cpp:326-348`): the segments (plus the attr
+    * sidecar's filter lists, when present) are co-located by docId bucket
+    * and each partition is packed into a [[ServingPart]] — a term-keyed
+    * directory over one byte buffer holding the rows with their compressed
+    * blocks as they are. The first batch pays one scan + shuffle to fill
+    * it; every later batch is one job that decodes only its own terms'
+    * rows ([[runPacked]]). Callers that query once should pass
     * `cacheServing = false`. */
   def openIndex(spark: SparkSession, dir: String,
                 cacheServing: Boolean = true): IndexHandle = {
+    import spark.implicits._
     val meta = IndexBuild.readMeta(spark, dir)
     val segments = IndexBuild.readSegments(spark, dir)
     val served =
       if (cacheServing && meta.doc_partitioned) {
-        // An attribute sidecar (virtual filter lists, [[Attrs]]) loads
-        // into the SAME cache: filter rows bucket like postings and are
-        // tiny beside them (one docId per doc per attr vs one posting per
-        // token), so filtered batches serve from memory too. Unfiltered
-        // batches drop them in their whereTerms semi-join as usual.
+        // Filter rows bucket like postings and are tiny beside them (one
+        // docId per doc per attr vs one posting per token), so filtered
+        // batches serve from the same cache.
         val hasAttrs = Attrs.hasAttrs(spark, dir)
         val withAttrs =
           if (hasAttrs) segments.union(Attrs.allFilterRows(spark, dir))
           else segments
-        (Some(withAttrs.repartition(org.apache.spark.sql.functions.col("bucket"))
+        (Some(withAttrs.repartition($"bucket").mapPartitions(ServingPart.pack(_))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)),
           hasAttrs)
       } else (None, false)
@@ -1231,9 +1319,9 @@ object QueryEngine {
     * `filter = Some((attr, values))` restricts results to docs whose
     * persisted attribute (an [[Attrs]] sidecar next to the index) is IN
     * `values` — BM25 stats stay corpus-global, only candidacy changes.
-    * The predicate's virtual posting lists join the batch's stream: from
-    * the serving cache when the handle holds one (openIndex folds the
-    * sidecar in), else unioned before the bucket co-shuffle. */
+    * The predicate's virtual posting lists join the batch's stream: looked
+    * up in the packed serving layout when the handle holds one (openIndex
+    * folds the sidecar in), else unioned before the bucket co-shuffle. */
   def runOnHandle(spark: SparkSession, h: IndexHandle,
                   queries: Seq[(Int, Seq[String])] = QuerySet.queryTerms,
                   k: Int = QuerySet.K,
@@ -1250,9 +1338,7 @@ object QueryEngine {
     // what empty filterTerms would silently mean downstream. An empty
     // RANGE (lo > hi) needs no special case: it selects zero virtual
     // lists, so every bucket folds an empty mask and admits nothing.
-    if (filter.exists(_._2.isEmpty))
-      return spark.emptyDataset[Hit].toDF()
-        .select($"query_id", $"rank", $"doc_id", $"score_micro")
+    if (filter.exists(_._2.isEmpty)) return localHits(spark, Nil)
     val meta = h.meta
     val qTerms = queries.flatMap(_._2).distinct
     // df + salting lookup restricted to query terms — filter pushed to
@@ -1277,6 +1363,10 @@ object QueryEngine {
     val p = plan(cs, termDf, queries, k, conjunctive)
       .copy(bucketWidth = meta.bucket_width, filterTerms = fTerms,
         filterRange = rangeFilter)
+    // No query term is in the index (out-of-vocabulary words; AND queries
+    // missing a term are dropped by plan): nothing can score, so answer
+    // without a job.
+    if (p.termToQueries.isEmpty) return localHits(spark, Nil)
     val filterOn = p.filterActive
     def fRows(): Dataset[PostingRow] = (filter, rangeFilter) match {
       case (Some((a, vs)), _) => Attrs.filterRows(spark, h.dir, a, vs)
@@ -1285,11 +1375,11 @@ object QueryEngine {
     }
     if (meta.doc_partitioned)
       h.served match {
-        case Some(cached) if !filterOn || h.attrsCached =>
+        case Some(packed) if !filterOn || h.attrsCached =>
           // filtered batches may use the cache only if it carries the
           // attr sidecar (openIndex folds it in when present at open
           // time) — otherwise their buckets would all look filter-empty
-          runDocPartitioned(spark, cached, p, effort, bucketLocal = true)
+          runPacked(spark, packed, p, effort)
         case _ =>
           val base = if (!filterOn) h.segments else h.segments.union(fRows())
           runDocPartitioned(spark, base, p, effort)

@@ -60,6 +60,19 @@ class DiskIndexSpec extends AnyFunSuite {
     assert(got == oracle)
   }
 
+  test("driver-side candidatePartIds == every segment row's stored part_id") {
+    val docs = Stats.readDocuments(spark, sfDir)
+    val dir = tmpDir()
+    val meta = IndexBuild.writeIndex(spark, docs, dir, SparkEntry.testConfig)
+    val segs = IndexBuild.readSegments(spark, dir).collect()
+    // salted rows carry bucket > 0: both halves of the (term, bucket) key count
+    assert(segs.exists(_.bucket > 0) && segs.exists(_.bucket == 0))
+    segs.foreach { r =>
+      assert(QueryEngine.candidatePartIds(spark, meta, Seq((r.term, r.bucket))) == Seq(r.part_id),
+        s"(${r.term}, ${r.bucket}) stored in part ${r.part_id}")
+    }
+  }
+
   test("doc-partitioned serving index: batched query == oracle; partitions are doc ranges") {
     import spark.implicits._
     val docs = Stats.readDocuments(spark, sfDir)
